@@ -294,10 +294,11 @@ def match_trajectories(
 
     # single-pass streaming kernel over traj_id-sorted partitions:
     # groups are consecutive, so one python zip-iteration flushes each
-    # trajectory's buffered rows on key change — no per-group pandas
-    # sub-frame (~0.4 ms each, the residual cost of the generic
-    # buffered_group_flatmap measured at 25k groups; guide §4.2: keep
-    # the per-row python to plain tuples)
+    # trajectory's buffered rows on key change. Deliberately not
+    # raster.ops.map_sorted_groups: a pandas sub-frame per group costs
+    # ~100 µs on 4-row groups (groupby or np.flatnonzero + iloc slices
+    # alike, pandas 2.2), this tuple loop ~2.4 µs — about 2.8 s of CPU
+    # at the 25k trajectories of `bench_extra.py viterbi`
     import pandas as pd
 
     n_part = max(full.sparkSession.sparkContext.defaultParallelism, 8)

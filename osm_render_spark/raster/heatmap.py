@@ -38,7 +38,7 @@ from ..functions.projection import (
     tile_y_sql,
 )
 from .codec import encode_png
-from .ops import buffered_group_map
+from .ops import map_sorted_groups
 
 
 def pixel_bin_sql(lon: str, lat: str, zoom: int, tile_px: int) -> str:
@@ -102,7 +102,7 @@ def density_tiles(
             .reshape(tile_px, tile_px)
             .T
         )
-        return (
+        return [(
             int(g["tile_key"].iloc[0]),
             int(g["tile_x"].iloc[0]),
             int(g["tile_y"].iloc[0]),
@@ -110,11 +110,11 @@ def density_tiles(
             int(ns.sum()),
             max_bin,
             int((bins * ns).sum()),
-        )
+        )]
 
-    return buffered_group_map(
+    return map_sorted_groups(
         counts,
-        "tile_key",
+        ["tile_key"],
         render_group,
         [
             "tile_key", "tile_x", "tile_y", "bytes", "n_points",

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.pbf import _encode_varint, _len_field, _varint_field, scan_fields
-from .ops import buffered_group_map
+from .ops import map_sorted_groups
 
 MOVE_TO, LINE_TO, CLOSE_PATH = 1, 2, 7
 TYPE_POINT, TYPE_LINESTRING, TYPE_POLYGON = 1, 2, 3
@@ -312,18 +312,18 @@ def vector_tiles(
                  + np.asarray(qy, dtype=np.int64)).sum()
             )
         blob = encode_mvt({layer: feats}, extent)
-        return (
+        return [(
             int(g["tile_key"].iloc[0]),
             int(g["tile_x"].iloc[0]),
             int(g["tile_y"].iloc[0]),
             blob,
             len(feats),
             digest,
-        )
+        )]
 
-    return buffered_group_map(
+    return map_sorted_groups(
         local,
-        "tile_key",
+        ["tile_key"],
         render_group,
         ["tile_key", "tile_x", "tile_y", "bytes", "n_features", "coord_digest"],
         (

@@ -6,6 +6,12 @@ Python. DataFrame plumbing (grouping, joins, fan-out) is pure Spark, so
 Catalyst handles partitioning; the per-scene/per-tile group kernels are
 embarrassingly parallel across groups.
 
+Small, numerous groups (slippy tiles, pyramid parents, DEM tiles) go
+through :func:`map_sorted_groups`, the one grouped-stream primitive:
+repartition on the key columns, sort within partitions, and walk many
+groups per Arrow batch in mapInPandas. Per-scene stages whose contract
+is the whole group stay on ``applyInPandas``.
+
 Scale notes: tiles are the unit of parallelism (co-partition by tile/scene
 key before the kernels — one shuffle); sprite fan-out is a crossJoin
 against a tiny modes dimension (broadcast, no shuffle of the tile side);
@@ -43,82 +49,43 @@ AREA_COLORS = {
 }
 
 
-def buffered_group_map(df, key_col: str, render_group, cols, schema):
-    """Many groups per Arrow batch: repartition on ``key_col`` + sort
-    within partitions, then iterate groups inside mapInPandas, buffering
-    the group that spans a batch boundary. One applyInPandas group per
-    key costs ~4 ms of per-group overhead — at millions of tiles that
-    dominates; this shape amortizes it across whole batches. Shared by
-    render_slippy_tiles, the pyramid rollup, and density_tiles so the
-    boundary-buffering logic can never diverge.
+def map_sorted_groups(df, keys: list[str], group_rows, cols, schema):
+    """Many key groups per Arrow batch: repartition on ``keys`` + sort
+    within partitions, then walk the groups inside mapInPandas, carrying
+    the group that spans a batch boundary into the next batch. One
+    applyInPandas group per key costs ~4 ms of per-group overhead — at
+    millions of tiles that dominates; this shape amortizes it across
+    whole batches. This is the package's one copy of the boundary walk.
 
-    ``render_group(pdf) -> tuple`` produces one output row (``cols``
-    order) per key group; groups arrive sorted by key."""
-    import pandas as pd  # noqa: F811 — kernel-local import for executors
-
+    ``group_rows(pdf) -> list[tuple]`` emits zero or more output rows
+    (``cols`` order) per key group; each group is handed over exactly
+    once, in key order. Rows whose key has a null component form their
+    own group (``dropna=False``)."""
     n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    arranged = df.repartition(n_part, key_col).sortWithinPartitions(key_col)
+    arranged = df.repartition(n_part, *keys).sortWithinPartitions(*keys)
+
+    def emit(rows):
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
 
     def kernel(batches):
-        pending: pd.DataFrame | None = None
+        pending = None
         for pdf in batches:
             if pending is not None:
                 pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
             if len(pdf) == 0:
                 continue
-            last_key = pdf[key_col].iloc[-1]
-            head = pdf[pdf[key_col] != last_key]
-            pending = pdf[pdf[key_col] == last_key]
-            if len(head):
-                out = [
-                    render_group(g) for _k, g in head.groupby(key_col, sort=True)
-                ]
-                yield pd.DataFrame(out, columns=cols)
-        if pending is not None and len(pending):
-            out = [
-                render_group(g) for _k, g in pending.groupby(key_col, sort=True)
-            ]
-            yield pd.DataFrame(out, columns=cols)
-
-    return arranged.mapInPandas(kernel, schema=schema)
-
-
-def buffered_group_flatmap(df, key_col: str, group_rows, cols, schema):
-    """Multi-row sibling of :func:`buffered_group_map`: same
-    repartition-on-key + sort-within-partitions + boundary-buffered
-    batch iteration, but ``group_rows(pdf) -> list[tuple]`` may emit
-    ZERO OR MORE output rows per key group (``cols`` order). Used by
-    operators whose per-group kernel expands (e.g. Viterbi trajectory
-    matching emits one row per sequence point) — one applyInPandas
-    group per key costs ~4 ms of per-group overhead, which dominates
-    when groups are tiny and plentiful (guide §4.5 amortization)."""
-    import pandas as pd  # noqa: F811 — kernel-local import for executors
-
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    arranged = df.repartition(n_part, key_col).sortWithinPartitions(key_col)
-
-    def kernel(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last_key = pdf[key_col].iloc[-1]
-            head = pdf[pdf[key_col] != last_key]
-            pending = pdf[pdf[key_col] == last_key]
-            if len(head):
-                out: list = []
-                for _k, g in head.groupby(key_col, sort=True):
-                    out.extend(group_rows(g))
-                yield pd.DataFrame(out, columns=cols)
-        if pending is not None and len(pending):
-            out = []
-            for _k, g in pending.groupby(key_col, sort=True):
-                out.extend(group_rows(g))
-            yield pd.DataFrame(out, columns=cols)
+            # sorted input: a group is complete once the next one starts;
+            # the batch's last group may continue in the next batch, so
+            # it is held back as ``pending``
+            out, pending = [], None
+            for _k, g in pdf.groupby(keys, sort=False, dropna=False):
+                if pending is not None:
+                    out += group_rows(pending)
+                pending = g
+            yield from emit(out)
+        if pending is not None:
+            yield from emit(group_rows(pending))
 
     return arranged.mapInPandas(kernel, schema=schema)
 
@@ -377,18 +344,18 @@ def render_slippy_tiles(
         # (each way appears exactly once per covered tile) — the
         # slippy_render oracle recomputes them from the fan-out
         # arithmetic in DuckDB
-        return (
+        return [(
             int(g["tile_key"].iloc[0]),
             int(g["tile_x"].iloc[0]),
             int(g["tile_y"].iloc[0]),
             encode_png(surf),
             len(g),
             int(g["way_id"].sum()),
-        )
+        )]
 
-    return buffered_group_map(
+    return map_sorted_groups(
         local,
-        "tile_key",
+        ["tile_key"],
         render_group,
         ["tile_key", "tile_x", "tile_y", "bytes", "n_ways", "way_sum"],
         (

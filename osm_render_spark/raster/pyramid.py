@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .codec import decode_png, encode_png
-from .ops import LAND_COLOR, buffered_group_map
+from .ops import LAND_COLOR, map_sorted_groups
 
 
 def downsample2x(img: np.ndarray) -> np.ndarray:
@@ -106,7 +106,7 @@ def rollup_level(tiles: DataFrame, zoom: int, tile_px: int = 256) -> DataFrame:
         png = _compose_parent(
             list(zip(g["qx"], g["qy"], g["bytes"])), tile_px
         )
-        return (
+        return [(
             int(g["parent_key"].iloc[0]),
             int(g["px"].iloc[0]),
             int(g["py"].iloc[0]),
@@ -114,12 +114,11 @@ def rollup_level(tiles: DataFrame, zoom: int, tile_px: int = 256) -> DataFrame:
             int(g["n_ways"].sum()),
             int(g["way_sum"].sum()),
             len(g),
-        )
+        )]
 
-    # group-buffered mapInPandas (shared shape — raster/ops.py)
-    return buffered_group_map(
+    return map_sorted_groups(
         prepared,
-        "parent_key",
+        ["parent_key"],
         render_group,
         [
             "tile_key", "tile_x", "tile_y", "bytes", "n_ways", "way_sum",
@@ -148,8 +147,6 @@ def rollup_levels(
     at 4^n_levels tiles."""
     if zoom < n_levels:
         raise ValueError("cannot roll up below zoom 0")
-    from .ops import buffered_group_flatmap
-
     n_anc = 1 << (zoom - n_levels)
     prepared = tiles.select(
         (
@@ -193,9 +190,9 @@ def rollup_levels(
                 )
         return out
 
-    return buffered_group_flatmap(
+    return map_sorted_groups(
         prepared,
-        "_akey",
+        ["_akey"],
         subtree_rows,
         [
             "tile_key", "tile_x", "tile_y", "bytes", "n_ways", "way_sum",

@@ -251,16 +251,12 @@ def terrain_tiles(
         else tiles
     )
 
-    import pyspark.sql.functions as F
+    from .ops import map_sorted_groups
 
-    from .ops import buffered_group_map
-
-    parts = _halo_parts_df(src, tile_px, keyed).withColumn(
-        "gkey", F.concat_ws(":", "raster", "tx", "ty")
-    )
+    parts = _halo_parts_df(src, tile_px, keyed)
     key_sel = (["raster"] if keyed else []) + ["tx", "ty"]
 
-    # buffered_group_map (many tiles per Arrow batch) instead of one
+    # map_sorted_groups (many tiles per Arrow batch) instead of one
     # applyInPandas call per tile: per-group Python overhead is ~4 ms,
     # which at a million tiles would dwarf the numpy kernel
     if mode == "hillshade":
@@ -269,19 +265,21 @@ def terrain_tiles(
 
         def render_group(g: pd.DataFrame):
             p = _assemble(g, tile_px)
+            if p is None:  # halo-only address off the grid
+                return []
             r = g.iloc[0]
-            if p is None:  # halo-only address off the grid → dropped below
-                return (r["raster"], int(r["tx"]), int(r["ty"]), None)
             hs = hillshade(
                 p,
                 cellsize=cellsize,
                 azimuth_deg=azimuth_deg,
                 altitude_deg=altitude_deg,
             )
-            return (r["raster"], int(r["tx"]), int(r["ty"]), hs.tobytes())
+            return [(r["raster"], int(r["tx"]), int(r["ty"]), hs.tobytes())]
 
-        out = buffered_group_map(parts, "gkey", render_group, cols, schema)
-        return out.where(F.col("shade").isNotNull()).select(*key_sel, "shade")
+        out = map_sorted_groups(
+            parts, ["raster", "tx", "ty"], render_group, cols, schema
+        )
+        return out.select(*key_sel, "shade")
 
     # stats mode: PIXEL BYTES NEVER SHUFFLE.  Stage A reduces each
     # tile's interior (rows/cols 1..t−2, whose Horn stencils stay
@@ -329,7 +327,7 @@ def terrain_tiles(
     parts_s = src.mapInPandas(
         stage_a,
         schema="raster string, tx long, ty long, dx int, dy int, part binary",
-    ).withColumn("gkey", F.concat_ws(":", "raster", "tx", "ty"))
+    )
 
     t = tile_px
     ring = np.zeros((t, t), dtype=bool)
@@ -345,7 +343,7 @@ def terrain_tiles(
         r = g.iloc[0]
         parts_map = {(int(p.dx), int(p.dy)): p.part for p in g.itertuples()}
         if (2, 2) not in parts_map:  # halo-only address off the grid
-            return (r["raster"], int(r["tx"]), int(r["ty"]), None, None, None)
+            return []
         psum = np.frombuffer(parts_map[2, 2], dtype=np.int64)
         frame = np.frombuffer(parts_map[0, 0], dtype=_I32)
         p = np.zeros((t + 2, t + 2), dtype=np.int64)
@@ -385,17 +383,17 @@ def terrain_tiles(
         p[-1, 0] = corner(-1, 1, -1, 0)
         p[-1, -1] = corner(1, 1, -1, -1)
         gx, gy = horn_gradients(p)
-        return (
+        return [(
             r["raster"], int(r["tx"]), int(r["ty"]),
             int(psum[0]),
             int(psum[1] + np.abs(gx)[ring].sum()),
             int(psum[2] + np.abs(gy)[ring].sum()),
-        )
+        )]
 
-    out = buffered_group_map(parts_s, "gkey", render_group, cols, schema)
-    return out.where(F.col("sum_z").isNotNull()).select(
-        *key_sel, "sum_z", "sum_abs_gx", "sum_abs_gy"
+    out = map_sorted_groups(
+        parts_s, ["raster", "tx", "ty"], render_group, cols, schema
     )
+    return out.select(*key_sel, "sum_z", "sum_abs_gx", "sum_abs_gy")
 
 
 # marching-squares segment table: corner bits TL=8 TR=4 BR=2 BL=1
@@ -503,7 +501,7 @@ def contour_tiles(
       exact ppm-quantized crossing endpoints in global pixel space."""
     if mode not in ("segments", "stats"):
         raise ValueError(f"unknown mode {mode!r}")
-    import pyspark.sql.functions as F
+    from .ops import map_sorted_groups
 
     keyed = raster_col is not None
     src = (
@@ -511,107 +509,47 @@ def contour_tiles(
         if keyed and raster_col != "raster"
         else tiles
     )
-    parts = _halo_parts_df(src, tile_px, keyed).withColumn(
-        "gkey", F.concat_ws(":", "raster", "tx", "ty")
-    )
+    parts = _halo_parts_df(src, tile_px, keyed)
     key_sel = (["raster"] if keyed else []) + ["tx", "ty"]
     thrs = list(thresholds)
 
     if mode == "stats":
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                for _k, g in _iter_groups(pdf):
-                    got = _assemble_flags(g, tile_px)
-                    if got is None:
-                        continue
-                    p, has_e, has_s = got
-                    r0 = g.iloc[0]
-                    m = _cell_mask(tile_px, has_e, has_s)
-                    for thr in thrs:
-                        case, *_ = _contour_cells(p, thr)
-                        cut = ((case > 0) & (case < 15) & m).sum()
-                        nseg = int(_MS_NSEG[case][m].sum())
-                        rows.append(
-                            (r0["raster"], int(r0["tx"]), int(r0["ty"]),
-                             thr, int(cut), nseg)
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["raster", "tx", "ty", "thr", "n_cut",
-                             "n_segments"],
-                )
+        vals = ["n_cut", "n_segments"]
 
-        schema = (
-            "raster string, tx long, ty long, thr long, n_cut long, "
-            "n_segments long"
-        )
-        out_cols = key_sel + ["thr", "n_cut", "n_segments"]
+        def thr_rows(p, m, thr, tx, ty):
+            case, *_ = _contour_cells(p, thr)
+            cut = ((case > 0) & (case < 15) & m).sum()
+            return [(int(cut), int(_MS_NSEG[case][m].sum()))]
     else:
-        def kernel(batches):
-            for pdf in batches:
-                rows = []
-                for _k, g in _iter_groups(pdf):
-                    got = _assemble_flags(g, tile_px)
-                    if got is None:
-                        continue
-                    p, has_e, has_s = got
-                    r0 = g.iloc[0]
-                    m = _cell_mask(tile_px, has_e, has_s)
-                    for thr in thrs:
-                        for seg in _segments_for_tile(
-                            p, m, thr, int(r0["tx"]), int(r0["ty"]), tile_px
-                        ):
-                            rows.append(
-                                (r0["raster"], int(r0["tx"]), int(r0["ty"]),
-                                 thr, *seg)
-                            )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["raster", "tx", "ty", "thr", "x1_ppm",
-                             "y1_ppm", "x2_ppm", "y2_ppm"],
-                )
+        vals = ["x1_ppm", "y1_ppm", "x2_ppm", "y2_ppm"]
 
-        schema = (
-            "raster string, tx long, ty long, thr long, x1_ppm long, "
-            "y1_ppm long, x2_ppm long, y2_ppm long"
-        )
-        out_cols = key_sel + ["thr", "x1_ppm", "y1_ppm", "x2_ppm", "y2_ppm"]
+        def thr_rows(p, m, thr, tx, ty):
+            return _segments_for_tile(p, m, thr, tx, ty, tile_px)
 
-    n_part = max(tiles.sparkSession.sparkContext.defaultParallelism, 8)
-    arranged = parts.repartition(n_part, "gkey").sortWithinPartitions("gkey")
-    return arranged.mapInPandas(
-        _group_buffered(kernel, "gkey"), schema=schema
-    ).select(*out_cols)
+    def group_rows(g: pd.DataFrame):
+        got = _assemble_flags(g, tile_px)
+        if got is None:
+            return []
+        p, has_e, has_s = got
+        r0 = g.iloc[0]
+        raster, tx, ty = r0["raster"], int(r0["tx"]), int(r0["ty"])
+        m = _cell_mask(tile_px, has_e, has_s)
+        return [
+            (raster, tx, ty, thr, *v)
+            for thr in thrs
+            for v in thr_rows(p, m, thr, tx, ty)
+        ]
 
-
-def _iter_groups(pdf: pd.DataFrame):
-    return pdf.groupby("gkey", sort=True)
-
-
-def _group_buffered(kernel, key_col: str):
-    """Boundary-buffering wrapper: kernels above consume whole groups
-    per batch; this re-yields batches so the group spanning a batch
-    boundary is processed exactly once (the buffered_group_map shape,
-    but for kernels emitting MANY rows per group)."""
-
-    def wrapped(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            last = pdf[key_col].iloc[-1]
-            head = pdf[pdf[key_col] != last]
-            pending = pdf[pdf[key_col] == last]
-            if len(head):
-                yield from kernel([head])
-        if pending is not None and len(pending):
-            yield from kernel([pending])
-
-    return wrapped
+    schema = "raster string, tx long, ty long, thr long, " + ", ".join(
+        f"{c} long" for c in vals
+    )
+    return map_sorted_groups(
+        parts,
+        ["raster", "tx", "ty"],
+        group_rows,
+        ["raster", "tx", "ty", "thr", *vals],
+        schema,
+    ).select(*key_sel, "thr", *vals)
 
 
 def contour_mvt_tiles(
@@ -623,10 +561,8 @@ def contour_mvt_tiles(
     endpoints to the MVT extent with the engine-wide floor(x+0.5)
     (exact integer arithmetic: (v − origin·10⁶)·extent then one DIV).
     One exchange (the per-tile group)."""
-    import pyspark.sql.functions as F
-
     from .mvt import encode_mvt
-    from .ops import buffered_group_map
+    from .ops import map_sorted_groups
 
     M = 1_000_000
 
@@ -646,7 +582,7 @@ def contour_mvt_tiles(
         q_expr("y1_ppm", "ty") + " AS qy1",
         q_expr("x2_ppm", "tx") + " AS qx2",
         q_expr("y2_ppm", "ty") + " AS qy2",
-    ).withColumn("gkey", F.expr("concat(tx, ':', ty)"))
+    )
 
     def render_group(g: pd.DataFrame):
         feats = [
@@ -664,14 +600,14 @@ def contour_mvt_tiles(
             )
         ]
         r0 = g.iloc[0]
-        return (
+        return [(
             int(r0["tx"]), int(r0["ty"]), len(feats),
             encode_mvt({"contours": feats}, extent=extent),
-        )
+        )]
 
-    return buffered_group_map(
+    return map_sorted_groups(
         local,
-        "gkey",
+        ["tx", "ty"],
         render_group,
         ["tile_x", "tile_y", "n_features", "mvt"],
         "tile_x long, tile_y long, n_features long, mvt binary",
@@ -719,7 +655,7 @@ def dem_overview(
         raise ValueError("tile_px must be divisible by factor")
     import pyspark.sql.functions as F
 
-    from .ops import buffered_group_map
+    from .ops import map_sorted_groups
 
     keyed = raster_col is not None
     src = (
@@ -746,7 +682,7 @@ def dem_overview(
         f"tx % {f} AS sx",
         f"ty % {f} AS sy",
         "dem",
-    ).withColumn("gkey", F.concat_ws(":", "raster", "otx", "oty"))
+    )
 
     sub = tile_px // f
 
@@ -761,14 +697,14 @@ def dem_overview(
             pooled = (2 * sums + f * f) // (2 * f * f)
             y0, x0 = int(r.sy) * sub, int(r.sx) * sub
             out[y0 : y0 + sub, x0 : x0 + sub] = pooled
-        return (
+        return [(
             r0["raster"], int(r0["otx"]), int(r0["oty"]),
             out.astype(_I32).tobytes(),
-        )
+        )]
 
-    res = buffered_group_map(
+    res = map_sorted_groups(
         parts,
-        "gkey",
+        ["raster", "otx", "oty"],
         render_group,
         ["raster", "tx", "ty", "dem"],
         "raster string, tx long, ty long, dem binary",

@@ -276,9 +276,7 @@ def read_geotiff_tiles(
         # every part is a whole engine tile already — no exchange
         return parts.selectExpr("raster", "tx", "ty", "px AS dem")
 
-    import pyspark.sql.functions as F
-
-    from ..raster.ops import buffered_group_map
+    from ..raster.ops import map_sorted_groups
 
     def assemble(group: pd.DataFrame):
         tile = np.zeros((tile_px, tile_px), dtype=_I32)
@@ -286,12 +284,11 @@ def read_geotiff_tiles(
             a = np.frombuffer(r.px, dtype=_I32).reshape(r.sh, r.sw)
             tile[r.oy : r.oy + r.sh, r.ox : r.ox + r.sw] = a
         r0 = group.iloc[0]
-        return (r0["raster"], int(r0["tx"]), int(r0["ty"]), tile.tobytes())
+        return [(r0["raster"], int(r0["tx"]), int(r0["ty"]), tile.tobytes())]
 
-    keyed = parts.withColumn("gkey", F.concat_ws(":", "raster", "tx", "ty"))
-    return buffered_group_map(
-        keyed,
-        "gkey",
+    return map_sorted_groups(
+        parts,
+        ["raster", "tx", "ty"],
         assemble,
         ["raster", "tx", "ty", "dem"],
         "raster string, tx long, ty long, dem binary",

@@ -197,6 +197,53 @@ def test_sprites_and_atlas(spark, scene_tiles):
     assert atlas_img.shape[1] == 4 * 396
 
 
+def test_map_sorted_groups_crosses_arrow_batches(spark):
+    """Two-row Arrow batches: a 7-row group spans four batches and must
+    still reach ``group_rows`` whole and once; a group emitting no rows
+    and keys with a null component match a pandas groupby reference."""
+    import pandas as pd
+
+    from osm_render_spark.raster.ops import map_sorted_groups
+
+    rows = (
+        [(1, "x", v) for v in range(7)]
+        + [(1, "y", 10), (2, "x", 11), (2, "x", 12), (2, "x", 13)]
+        + [(None, "x", 14), (None, "x", 15), (3, None, 16)]
+    )
+
+    def summarize(g):
+        a, b = g["a"].iloc[0], g["b"].iloc[0]
+        if a == 2:
+            return []
+        a = None if pd.isna(a) else int(a)
+        return [(a, b, len(g), int(g["v"].sum()))]
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def group_rows(g):
+        calls.add(1)
+        return summarize(g)
+
+    df = spark.createDataFrame(rows, "a long, b string, v long")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        got = map_sorted_groups(
+            df, ["a", "b"], group_rows, ["a", "b", "n", "v_sum"],
+            "a long, b string, n long, v_sum long",
+        ).collect()
+    finally:
+        spark.conf.set(conf, old)
+
+    ref = pd.DataFrame(rows, columns=["a", "b", "v"]).groupby(
+        ["a", "b"], dropna=False
+    )
+    want = [r for _k, g in ref for r in summarize(g)]
+    assert calls.value == ref.ngroups == 5
+    assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr)
+
+
 def test_glyph_atlas_fixture_matches_generator():
     """The shipped pre-rendered atlas (tools/make_goldens.py) must be
     byte-identical to the deterministic generator (R7 AA fixture pin)."""
